@@ -68,11 +68,16 @@ def render_timestamp_py(ts: datetime) -> str:
     return f"{base}{frac}Z"
 
 
-def serialize_event(data: dict[str, Any]) -> bytes:
+def serialize_event(data: Any) -> bytes:
     """Wire-parity JSON: sorted keys, no whitespace (Go json.Marshal sorts
-    map keys — main.go:202). Go additionally HTML-escapes <>& which we skip;
-    none of our payloads contain them."""
-    return json.dumps(data, sort_keys=True, separators=(",", ":")).encode("utf-8")
+    map keys — main.go:202), non-ASCII text as raw UTF-8 like Go and the
+    JVM ``to_json`` path (``é`` is 2 bytes, not a 6-byte ``\\u00e9``
+    escape), so byte sizes match the reference's chunk accounting. Go
+    additionally escapes <>& and U+2028/U+2029, which we skip; none of
+    our payloads contain them."""
+    return json.dumps(
+        data, sort_keys=True, separators=(",", ":"), ensure_ascii=False
+    ).encode("utf-8")
 
 
 # --- column-expression surface (distributed path) ---------------------------

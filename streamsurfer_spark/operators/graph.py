@@ -7,77 +7,52 @@ deduplication CLUSTERS by taking connected components of the pair graph,
 labeling each document with its cluster's minimum id (the canonical
 "keep the smallest id, drop the rest" curation rule).
 
-Algorithm: min-label propagation to fixpoint — per iteration every node
-takes the min label among itself and its neighbors. Each iteration is one
-equi-join + one groupBy (both shuffle on the node id, so the partitioning
-is reused); iterations = graph diameter. Convergence is detected by the
-same set checksum both algorithms use (count + decimal sum of
-xxhash64(id, label) — type-generic, overflow-proof): an unchanged
-checksum means an unchanged label set, i.e. the fixpoint. One 1-row
-aggregate per round, no extra join.
+One implementation, two execution paths chosen by the observed edge
+count. The edge set is canonicalized once (hi, lo), deduplicated and
+persisted; then
 
-Scale notes (100 TB): near-dup graphs are overwhelmingly tiny components
-(pairs/triples), so diameter — and the iteration count — stays single-digit
-even at trillions of edges. Each iteration lazily localCheckpoints its
-labels — the convergence probe materializes the checkpoint in the same
-job, and lineage stays one round deep (else plan-analysis cost compounds
-per iteration). For adversarial long-chain graphs, pass
-``algorithm="star"`` to use the large-star/small-star contraction
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) — the same join/groupBy primitives, but each round HALVES long
-paths (large-star hangs every node off its neighborhood minimum,
-small-star flattens the resulting trees), so convergence is O(log n)
-rounds where min-label propagation needs O(diameter).
+- at or under ``CC_DRIVER_EDGE_CAP`` edges, one bounded Arrow collect and
+  an exact driver union-find label every node (min id per component);
+- above it, the large-star/small-star contraction (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14) runs on the
+  cluster. Each round is a few join/groupBy stages on the node id;
+  large-star hangs every node off its neighborhood minimum, small-star
+  flattens the resulting trees, so long paths halve per round and
+  convergence takes O(log n) rounds whatever the graph's diameter. At the
+  fixpoint the edge set IS the star (node → component min), so both paths
+  emit the identical label set.
+
+Convergence is detected by a set checksum (count + decimal sum of
+xxhash64(a, b) — type-generic and overflow-proof): an unchanged checksum
+means an unchanged edge set. Each round lazily localCheckpoints its edges
+and the checksum materializes them in the same job, so lineage stays one
+round deep. A graph that has not converged after ``CC_MAX_ROUNDS`` rounds
+raises.
 """
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-# Edge-count ceiling for the driver-side union-find fast path (r13,
-# optimization guide §3.1's broadcast logic applied to the fixpoint): a
-# contraction ROUND costs ~5 exchanges + one convergence action no matter
-# how small the graph, so a near-dup edge set that is broadcast-class
-# anyway (1M edges of two longs ≈ 16 MB on the wire — the same size class
-# as the session's 64 MB autoBroadcastJoinThreshold and similarity.py's
-# ≤34 MB centroid collect) is solved exactly in one bounded Arrow collect
-# + O(E α(E)) union-find + one createDataFrame, instead of O(log n)
-# rounds of full-width distributed jobs. The label set produced is
-# IDENTICAL (min id per component — pinned against both distributed
-# algorithms by tests/test_graph.py); above the cap the distributed
-# fixpoint runs unchanged, so 100 TB pair graphs never touch the driver.
-# Parameterised for cluster tuning like the shuffle-partition knob.
-CC_DRIVER_EDGE_CAP = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGE_CAP", "1000000")
-)
+from streamsurfer_spark.session import arrow_enabled
 
+# Edge-count ceiling for the driver union-find path: a contraction ROUND
+# costs ~5 exchanges + one convergence action no matter how small the
+# graph, so a near-dup edge set that is broadcast-class anyway (1M edges
+# of two longs ≈ 16 MB on the wire — the same size class as the session's
+# 64 MB autoBroadcastJoinThreshold and similarity.py's ≤34 MB centroid
+# collect) is solved exactly in one bounded Arrow collect + O(E α(E))
+# union-find + one createDataFrame, instead of O(log n) rounds of
+# full-width distributed jobs. Above the cap the contraction runs, so
+# 100 TB pair graphs never touch the driver. Tests monkeypatch it (-1
+# forces the contraction).
+CC_DRIVER_EDGE_CAP = 1_000_000
 
-def _arrow_collect(df: DataFrame):
-    """Bounded driver collect via Arrow toPandas with the conf
-    set/restore dance (same contract as similarity._ivf_assign_np's
-    centroid collect: the DRIVER's vanilla session has no engine
-    configs, and the flip must not outlive the call)."""
-    sess_conf = df.sparkSession.conf
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = sess_conf.get(key, None)
-        sess_conf.set(key, "true")
-    except Exception:
-        prev = False
-    try:
-        return df.toPandas()
-    finally:
-        if prev is not False:
-            try:
-                if prev is None:
-                    sess_conf.unset(key)
-                else:
-                    sess_conf.set(key, prev)
-            except Exception:
-                pass
+# Round budget of the star contraction. It needs O(log n) rounds in
+# practice (a 64-node path converges within 10), so 25 leaves wide
+# headroom; tests monkeypatch it.
+CC_MAX_ROUNDS = 25
 
 
 def _driver_components(edge_rows, extra_nodes=()) -> dict:
@@ -123,7 +98,7 @@ def _cc_driver_result(
     spark, labels: dict, id_type
 ) -> DataFrame:
     """(id, cluster_id) DataFrame from a driver-solved label map, with the
-    exact schema the distributed paths emit."""
+    exact schema the contraction path emits."""
     import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
@@ -137,129 +112,23 @@ def _cc_driver_result(
         return spark.createDataFrame([], schema)
     ids = list(labels.keys())
     pdf = pd.DataFrame({"id": ids, "cluster_id": [labels[i] for i in ids]})
-    sess_conf = spark.conf
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        prev = sess_conf.get(key, None)
-        sess_conf.set(key, "true")
-    except Exception:
-        prev = False
-    try:
+    with arrow_enabled(spark):
         return spark.createDataFrame(pdf, schema)
-    finally:
-        if prev is not False:
-            try:
-                if prev is None:
-                    sess_conf.unset(key)
-                else:
-                    sess_conf.set(key, prev)
-            except Exception:
-                pass
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Label every node of the undirected pair graph with min(component).
 
     Returns (id, cluster_id), still persisted (callers looping over it may
-    unpersist when done). Raises if the graph has not converged after
-    ``max_iter`` rounds.
+    unpersist when done). Raises if the contraction has not converged
+    after ``CC_MAX_ROUNDS`` rounds.
 
-    algorithm="label": min-label propagation — one join + groupBy per
-    round, rounds = diameter. The right default for near-dup graphs
-    (tiny components, single-digit diameters).
-    algorithm="star": large-star/small-star contraction — O(log n)
-    rounds on adversarial long-chain graphs.
-    """
-    if algorithm == "star":
-        return _connected_components_star(edges, src, dst, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm: {algorithm!r} (label|star)")
-    # persist the symmetrized edges: they are re-joined EVERY round, and the
-    # upstream pair pipeline (LSH / cosine near-dup) is far more expensive
-    # than the edge list it emits — without this, each round recomputes it
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).persist()
-    labels = (
-        sym.select(F.col("a").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    ).persist()
-
-    # The star variant's set checksum (count + decimal sum of
-    # xxhash64(id, lbl)): an unchanged checksum means an unchanged label
-    # SET — exactly the fixpoint. The previous raw F.sum(lbl) both
-    # overflowed int64 under Spark 4 ANSI for 64-bit hash/snowflake-style
-    # ids and hard-required numeric ids, failing string id columns with a
-    # cast error (r7 review).
-    def _checksum(d):
-        row = d.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("id", "lbl").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    prev_sum = _checksum(labels)
-
-    # broadcast-class graph → exact driver union-find (see
-    # CC_DRIVER_EDGE_CAP). The node count came free with the convergence
-    # checksum; the symmetrized edge count is one cached-read job (sym is
-    # persisted and was just materialized through labels' distinct).
-    if prev_sum[0] <= CC_DRIVER_EDGE_CAP and (
-        sym.count() <= 2 * CC_DRIVER_EDGE_CAP
-    ):
-        pdf = _arrow_collect(sym)
-        lbl_map = _driver_components(
-            zip(pdf["a"].tolist(), pdf["b"].tolist())
-        )
-        id_type = sym.schema["a"].dataType
-        out = _cc_driver_result(edges.sparkSession, lbl_map, id_type)
-        labels.unpersist()
-        sym.unpersist()
-        return out
-
-    for it in range(max_iter):
-        # candidate labels: own label ∪ every neighbor's label, then min.
-        nbr = sym.join(labels, sym["b"] == labels["id"]).select(
-            F.col("a").alias("id"), F.col("lbl")
-        )
-        # lazy localCheckpoint EVERY round: the convergence collect right
-        # below materializes it (no extra job), lineage stays one round
-        # deep (plan analysis cost would otherwise compound per round),
-        # and the checkpoint's own cache replaces an explicit persist
-        new_labels = (
-            labels.select("id", "lbl")
-            .union(nbr)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint(eager=False)
-        cur_sum = _checksum(new_labels)
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:  # unchanged label set == fixpoint
-            sym.unpersist()
-            return labels.select("id", F.col("lbl").alias("cluster_id"))
-        prev_sum = cur_sum
-
-    sym.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations"
-    )
-
-
-def _connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Large-star/small-star contraction (Kiveris et al., SoCC'14 §3).
-
-    Each round runs both operations on the edge set:
+    Each contraction round runs both operations of Kiveris et al.
+    (SoCC'14 §3) on the edge set:
 
     - large-star: group the symmetrized edges by node u; every neighbor
       v > u re-attaches to m = min(Γ(u) ∪ {u}). Long paths fold onto
@@ -268,32 +137,26 @@ def _connected_components_star(
       node and all its smaller neighbors attach to the minimum. Trees
       of depth 2 flatten to stars.
 
-    Both are one groupBy + one join on the node id (same primitives and
-    partitioning as label propagation), plus a distinct() to keep the
-    edge set canonical. Edge count never grows (each operation emits at
-    most one edge per input edge), and the component minimum is preserved
-    — at the fixpoint the edge set IS the star (node → component-min).
-
-    Convergence is detected by a set checksum (row count + sum of
-    xxhash64(a, b)): an unchanged checksum means an unchanged edge set
-    (hash-sum collisions on a changed set are ~2^-64). One 1-row
-    aggregate per round — no extra join.
+    Both are one groupBy + one join on the node id, plus a distinct() to
+    keep the edge set canonical. Edge count never grows (each operation
+    emits at most one edge per input edge), and the component minimum is
+    preserved — at the fixpoint the edge set IS the star (node →
+    component-min). Hash-sum collisions of the convergence checksum on a
+    changed set are ~2^-64.
     """
     # nodes whose ONLY edges are self-loops are filtered out of `e` below
-    # and would VANISH from the output while the label algorithm keeps
-    # them (r7 review) — keep them as singleton clusters and re-attach
-    # at the end. Near-dup pair generators emit id_a < id_b (no
-    # self-loops), so this side is typically empty and the anti-join
+    # and would VANISH from the output — keep them as singleton clusters
+    # and re-attach at the end. Near-dup pair generators emit id_a < id_b
+    # (no self-loops), so this side is typically empty and the anti-join
     # below is over an empty build side.
     #
-    # ONE canonicalized distinct feeds BOTH e and selfers (r13, guide
-    # §2.4): selfers previously re-derived from raw `edges`, so its
-    # single evaluation (the result-frame anti-join, or the fast path's
-    # collect) re-executed the caller's ENTIRE pair-generation pipeline a
-    # second time — the upstream LSH/cosine/containment stages are far
-    # more expensive than the edge list they emit. A self-loop (x, x)
-    # canonicalizes to (x, x), so filtering the cached distinct by a = b
-    # yields exactly the old distinct selfer set.
+    # ONE canonicalized distinct feeds BOTH e and selfers: deriving
+    # selfers from raw `edges` would re-execute the caller's ENTIRE
+    # pair-generation pipeline a second time — the upstream
+    # LSH/cosine/containment stages are far more expensive than the edge
+    # list they emit. A self-loop (x, x) canonicalizes to (x, x), so
+    # filtering the cached distinct by a = b yields exactly the distinct
+    # selfer set.
     eall = (
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
@@ -324,7 +187,8 @@ def _connected_components_star(
         # loud fallback (limit cap+1) since its size is not yet known.
         selfer_rows = selfers.limit(CC_DRIVER_EDGE_CAP + 1).collect()
         if len(selfer_rows) <= CC_DRIVER_EDGE_CAP:
-            pdf = _arrow_collect(e)
+            with arrow_enabled(edges.sparkSession):
+                pdf = e.toPandas()
             labels = _driver_components(
                 zip(pdf["a"].tolist(), pdf["b"].tolist()),
                 extra_nodes=[r[0] for r in selfer_rows],
@@ -333,7 +197,7 @@ def _connected_components_star(
             out = _cc_driver_result(edges.sparkSession, labels, id_type)
             eall.unpersist()
             return out
-    for it in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # ---- large-star: neighbors above u hang off min(Γ(u) ∪ {u})
         sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mins = sym.groupBy("a").agg(
@@ -389,7 +253,7 @@ def _connected_components_star(
 
     eall.unpersist()
     raise RuntimeError(
-        f"star contraction did not converge in {max_iter} iterations"
+        f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
     )
 
 
@@ -478,7 +342,6 @@ def cluster_representatives(
     dst: str = "doc_b",
     id_col: str = "doc_id",
     score_col: str = "quality_score",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Pick the best-quality member of every near-dup cluster — the
     curation rule that decides WHICH copy survives deduplication.
@@ -488,12 +351,6 @@ def cluster_representatives(
     clusters; each cluster's representative is its max-score member
     (ties broken toward the smallest id, so the choice is deterministic).
 
-    Default algorithm is min-label propagation: LSH near-dup clusters are
-    near-CLIQUES (every member shares a band with most others), so the
-    diameter — and the round count — is 2-3 regardless of corpus size.
-    Pass ``algorithm="star"`` for chain-shaped pair graphs (see ql23,
-    embedding near-dups, where a~b~c without a~c is common).
-
     Returns (cluster_id, n_members, rep_id, rep_score) — one row per
     multi-member cluster.
 
@@ -502,7 +359,7 @@ def cluster_representatives(
     on cluster_id — ``max_by`` over a (score, -id) struct collapses
     map-side, no window over skewed cluster partitions.
     """
-    cc = connected_components(pairs, src=src, dst=dst, algorithm=algorithm)
+    cc = connected_components(pairs, src=src, dst=dst)
     members = cc.join(scores, cc["id"] == scores[id_col]).select(
         F.col("cluster_id"), F.col(id_col), F.col(score_col)
     )

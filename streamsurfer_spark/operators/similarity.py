@@ -41,6 +41,7 @@ from pyspark.sql.types import DoubleType
 from streamsurfer_spark.functions.hashing import md5_long64_py
 from streamsurfer_spark.functions.pairs import grouped_pair_expand
 from streamsurfer_spark.functions.rounding import scaled_round
+from streamsurfer_spark.session import arrow_enabled
 
 N_PLANES = 8
 DIM = 64
@@ -738,30 +739,9 @@ def _ivf_assign_np(
     # Arrow-batched driver collect: at the 65536-centroid cap the py4j
     # Row path deserializes ~4.2M list elements in a Python loop
     # (measured ~30 s); the Arrow transfer of the same ≤34 MB is
-    # sub-second. Runtime-settable conf so the DRIVER's vanilla session
-    # (no engine builder configs) takes the fast path too. The prior
-    # value is RESTORED after the collect (r12 ADVICE: a one-way flip
-    # was a lasting global side effect of building one query — future
-    # session code relying on non-Arrow toPandas semantics would
-    # silently change path after the first IVF build).
-    sess_conf = df.sparkSession.conf
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        arrow_prev = sess_conf.get(arrow_key, None)
-        sess_conf.set(arrow_key, "true")
-    except Exception:
-        arrow_prev = False  # conf locked down → Row-path fallback, no restore
-    try:
+    # sub-second.
+    with arrow_enabled(df.sparkSession):
         cent_pdf = centroids.select(id_col, "qv").toPandas()  # bounded ≤34 MB
-    finally:
-        if arrow_prev is not False:
-            try:
-                if arrow_prev is None:
-                    sess_conf.unset(arrow_key)
-                else:
-                    sess_conf.set(arrow_key, arrow_prev)
-            except Exception:
-                pass
     out_fields = list(df.schema.fields) + [
         T.StructField("cent_id", centroids.schema[id_col].dataType, True)
     ]

@@ -1032,18 +1032,18 @@ def ql23_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Consumes ql21's exact cosine pair graph and labels every member with
     min(component) — the canonical keep-one-per-cluster curation rule.
-    Embedding near-dup graphs chain (a~b~c without a~c), so the
-    O(log n)-round large-star/small-star contraction beats min-label
-    propagation (O(diameter) rounds) here. The oracle recomputes
-    reachability with a recursive CTE, so the iterative Spark fixpoint is
-    checked against a closed-form transitive closure.
+    Embedding near-dup graphs chain (a~b~c without a~c); the
+    large-star/small-star contraction converges in O(log n) rounds
+    whatever the chain length. The oracle recomputes reachability with a
+    recursive CTE, so the Spark components are checked against a
+    closed-form transitive closure.
     """
     from streamsurfer_spark.operators.graph import connected_components
 
     emb = table(spark, sf_dir, "embeddings")
     pairs = similarity.cosine_near_dup_pairs(emb, NEAR_DUP_THRESHOLD)
     return (
-        connected_components(pairs, src="id_a", dst="id_b", algorithm="star")
+        connected_components(pairs, src="id_a", dst="id_b")
         .select(F.col("id").alias("vec_id"), "cluster_id")
         .orderBy("vec_id")
     )
@@ -1727,12 +1727,12 @@ FROM p ORDER BY doc_id
 
 def ql34_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which copy survives dedup: MinHash-LSH pairs → connected components
-    (min-label propagation — LSH clusters are near-cliques, diameter ≤ 3)
-    → keep each cluster's best-quality member (operators/graph.py
-    cluster_representatives). Completes the dedup story: ql02 finds the
-    pairs, ql23 clusters them, this picks the survivor. The oracle rebuilds
-    the clusters with a recursive CTE and the quality score with ql11's SQL
-    twin, then picks the same (max score, min id) representative."""
+    (min id per cluster) → keep each cluster's best-quality member
+    (operators/graph.py cluster_representatives). Completes the dedup
+    story: ql02 finds the pairs, ql23 clusters them, this picks the
+    survivor. The oracle rebuilds the clusters with a recursive CTE and
+    the quality score with ql11's SQL twin, then picks the same (max
+    score, min id) representative."""
     from streamsurfer_spark.operators.graph import cluster_representatives
 
     docs = table(spark, sf_dir, "documents")
@@ -3889,7 +3889,7 @@ def ql64_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)
     )
-    cc = connected_components(edges, src="doc_a", dst="doc_b", algorithm="star")
+    cc = connected_components(edges, src="doc_a", dst="doc_b")
     d = (
         docs.select("doc_id")
         .join(

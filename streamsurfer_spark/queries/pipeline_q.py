@@ -660,15 +660,9 @@ def qp06_semdedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = similarity.cosine_near_dup_pairs(
         blocked, SEMDEDUP_TAU, block_col="cent_id"
     )
-    # star, not label: within-cell cosine chains (a~b~c without a~c) have
-    # no diameter bound, and label propagation RAISES past max_iter=25
-    # rounds — a real-corpus hazard the fixtures never hit. Star contracts
-    # in O(log n) rounds with identical output (min-label per component;
-    # test_graph.py pins the parity), at a measured ≤1.2× warm fixture
-    # cost (r9 A/B: 8.7 vs 7.5 s).
-    comp = graph.connected_components(
-        pairs, "id_a", "id_b", algorithm="star"
-    ).select(F.col("id").alias("vec_id"), "cluster_id")
+    comp = graph.connected_components(pairs, "id_a", "id_b").select(
+        F.col("id").alias("vec_id"), "cluster_id"
+    )
     dropped = (F.col("cluster_id").isNotNull()) & (
         F.col("vec_id") != F.col("cluster_id")
     )
@@ -802,7 +796,8 @@ QP06_SQL = _qp06_sql()
 # gated hint every manifest join would plan as a corpus-wide sort-merge —
 # the r10-measured 3× trap that kept qp07 monolithic until r14. Above the
 # cap the planner's shuffle join runs unchanged (a 100 TB survivor
-# manifest is never broadcast). Env-tunable like CC_DRIVER_EDGE_CAP.
+# manifest is never broadcast). Overridable through the environment for
+# cluster tuning.
 MANIFEST_BROADCAST_ROW_CAP = int(
     os.environ.get("SPARK_GRAFT_MANIFEST_BROADCAST_ROW_CAP", str(4_000_000))
 )
@@ -1126,11 +1121,7 @@ def qp08_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, threshold=CONTAIN_THRESHOLD
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = exact_e.unionByName(lsh_e).unionByName(cont_e)
-    # star for the same reason as qp06: the merged edge families chain
-    # without a diameter bound, and label propagation raises past 25
-    # rounds; star is O(log n) with identical output (r9 A/B: 7.4 vs
-    # 7.7 s warm — free here)
-    cc = graph.connected_components(edges, "src", "dst", algorithm="star")
+    cc = graph.connected_components(edges, "src", "dst")
     sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         cc.join(sizes, "cluster_id")
@@ -1410,7 +1401,7 @@ def qp08_canonical_map_bounded(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     edges = exact_e.unionByName(lsh_e).unionByName(cont_e)
-    cc = graph.connected_components(edges, "src", "dst", algorithm="star")
+    cc = graph.connected_components(edges, "src", "dst")
     csizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         cc.join(csizes, "cluster_id")

@@ -21,6 +21,7 @@ Design notes (100 TB target):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -88,6 +89,37 @@ def get_spark(app_name: str = "streamsurfer-spark", *, shuffle_partitions: int |
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def arrow_enabled(spark: SparkSession):
+    """Run the block's pandas interchange (toPandas / createDataFrame from
+    pandas) over Arrow, then restore the prior conf value.
+
+    Runtime-settable, so the driver's vanilla session (no get_spark
+    configs) takes the Arrow path too; the flip does not outlive the
+    block, so later code relying on non-Arrow toPandas semantics is
+    unaffected. A locked-down conf falls back to the Row path with
+    nothing to restore.
+    """
+    conf = spark.conf
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    try:
+        prev = conf.get(key, None)
+        conf.set(key, "true")
+    except Exception:
+        prev = False
+    try:
+        yield
+    finally:
+        if prev is not False:
+            try:
+                if prev is None:
+                    conf.unset(key)
+                else:
+                    conf.set(key, prev)
+            except Exception:
+                pass
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

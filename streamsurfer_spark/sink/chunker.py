@@ -54,8 +54,6 @@ class BatchingEventQueue:
     """
 
     def __init__(self, config, client) -> None:
-        from streamsurfer_spark.sink.config import KinesisSinkConfig  # noqa: F401
-
         self.config = config
         self.client = client
         self._items: list[dict] = []
@@ -102,12 +100,12 @@ class BatchingEventQueue:
         """One PutRecord per batch: whole batch as a single JSON array with a
         random-UUID partition key (main.go:266-289). On failure returns the
         undelivered items."""
-        import json
         import uuid
 
-        payload = json.dumps(items, sort_keys=True, separators=(",", ":")).encode("utf-8")
+        from streamsurfer_spark.envelope import serialize_event
+
         record = {
-            "Data": payload,
+            "Data": serialize_event(items),
             "StreamName": self.config.stream_name,
             "PartitionKey": str(uuid.uuid4()),
         }

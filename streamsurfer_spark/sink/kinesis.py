@@ -332,6 +332,11 @@ def kinesis_stream_writer(
 
     ``query.processAllAvailable()`` is the streaming twin of the reference's
     Flush (main.go:254-264): it drains everything ingested so far.
+
+    Delivery is at-least-once. ``epoch_id`` is ignored, so a micro-batch
+    that fails after some records were acknowledged is replayed whole when
+    the query restarts from its checkpoint: the records acknowledged
+    before the failure arrive twice, every other event once.
     """
     writer = stream_df.writeStream.foreachBatch(
         lambda batch_df, _epoch: write_batch_to_kinesis(batch_df, config, client_factory)

@@ -148,6 +148,30 @@ class TestBatchingEventQueue:
         batch = json.loads(client.records[0]["Data"])
         assert batch[0]["origin"] == "my-app"
 
+    def test_non_ascii_sized_as_raw_utf8(self, monkeypatch):
+        """Counted size is the raw UTF-8 length, so two events of 2-byte
+        chars share a record that 6-byte escape sizing would have split,
+        and the third trips the threshold (main.go:202-208)."""
+        import streamsurfer_spark.envelope as envelope
+
+        ts = "2026-01-01T00:00:00Z"
+        monkeypatch.setattr(envelope, "render_timestamp_py", lambda _ts: ts)
+        val = "é" * 10
+        raw = '{"event":"%s","n":0,"server_timestamp":"%s"}' % (val, ts)
+        size = len(serialize_event({"event": val, "n": 0, "server_timestamp": ts}))
+        assert size == len(raw.encode("utf-8"))
+        # 2*size < max, so two items fit (escaped sizing, +4 bytes per
+        # "é", would trip on the second); 3*size >= max trips on the third
+        q, client = self.make(max_size=2 * size + 1)
+        for i in range(3):
+            assert q.enqueue({"event": val, "n": i}) == []
+        assert len(client.records) == 1
+        data = client.records[0]["Data"]
+        assert [e["n"] for e in json.loads(data)] == [0, 1]
+        assert val.encode("utf-8") in data  # wire bytes unescaped too
+        q.flush()
+        assert [e["n"] for e in json.loads(client.records[1]["Data"])] == [2]
+
     def test_validation_error_propagates(self):
         import pytest
 

@@ -101,3 +101,9 @@ class TestTimestampRender:
 class TestSerialize:
     def test_sorted_keys_compact(self):
         assert serialize_event({"b": 1, "a": {"z": 2, "y": 3}}) == b'{"a":{"y":3,"z":2},"b":1}'
+
+    def test_non_ascii_is_raw_utf8(self):
+        # Go json.Marshal and the JVM to_json path emit raw UTF-8: "é" is
+        # 2 bytes on the wire, not the 6-byte é escape
+        assert serialize_event({"event": "café"}) == '{"event":"café"}'.encode("utf-8")
+        assert len(serialize_event({"event": "café"})) == 17

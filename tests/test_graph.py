@@ -2,7 +2,8 @@
 
 The oracle suite (ql23) proves parity with DuckDB's recursive-CTE
 transitive closure on fixture data; these pin convergence behavior on
-crafted graph shapes.
+crafted graph shapes, on both execution paths (driver union-find and the
+distributed star contraction).
 """
 
 from __future__ import annotations
@@ -13,16 +14,15 @@ from streamsurfer_spark.operators import graph
 from streamsurfer_spark.operators.graph import connected_components
 
 
-def _cc(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components(df, **kw)
-    return {r.id: r.cluster_id for r in out.collect()}
+def _cc(spark, edges, schema="src long, dst long"):
+    df = spark.createDataFrame(edges, schema)
+    return {r.id: r.cluster_id for r in connected_components(df).collect()}
 
 
 @pytest.fixture
 def force_distributed(monkeypatch):
-    """Route connected_components past the r13 driver union-find fast
-    path so the distributed fixpoint loops stay covered."""
+    """Route connected_components past the driver union-find path so the
+    distributed star contraction stays covered."""
     monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", -1)
 
 
@@ -32,8 +32,8 @@ def test_two_components(spark):
 
 
 def test_chain_longer_than_checkpoint_interval(spark, force_distributed):
-    # a 9-node path: min label must walk the whole chain (8 hops > the
-    # localCheckpoint interval of 5), covering the lineage-truncation path
+    # a 9-node path needs several contraction rounds, each truncating
+    # lineage through its localCheckpoint
     edges = [(i, i + 1) for i in range(1, 9)]
     got = _cc(spark, edges)
     assert got == {i: 1 for i in range(1, 10)}
@@ -45,48 +45,37 @@ def test_direction_does_not_matter(spark):
     assert got == {1: 1, 5: 1, 9: 1}
 
 
-def test_max_iter_exceeded_raises(spark, force_distributed):
-    edges = [(i, i + 1) for i in range(1, 9)]
+def test_max_iter_exceeded_raises(spark, force_distributed, monkeypatch):
+    # a 64-node path needs ~log2(64) contraction rounds; 2 cannot finish it
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 2)
+    edges = [(i, i + 1) for i in range(1, 64)]
     df = spark.createDataFrame(edges, "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=2)
-
-
-def test_star_matches_label_on_mixed_graph(spark):
-    # pairs, a triangle, a path, and an isolated edge — both algorithms
-    # must produce identical clusterings
-    edges = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23), (40, 41)]
-    assert _cc(spark, edges, algorithm="star") == _cc(spark, edges, algorithm="label")
+        connected_components(df)
 
 
 def test_driver_fastpath_matches_distributed(spark, monkeypatch):
-    """The r13 driver union-find fast path must label EXACTLY like both
-    distributed fixpoints — same node set, same min-label clusters —
-    across the crafted shapes (mixed components, self-loop-only node,
-    reversed/duplicate edges, string ids)."""
+    """The driver union-find path must label EXACTLY like the star
+    contraction — same node set, same min-id clusters — across the
+    crafted shapes (mixed components, self-loop-only node,
+    reversed/duplicate edges, a long chain, string ids)."""
+    longs = "src long, dst long"
     shapes = [
-        [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23), (40, 41)],
-        [(7, 7), (1, 2)],
-        [(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)],
-        # chain diameter must stay under label propagation's max_iter=25
-        # so the forced-distributed comparison run can converge
-        [(i, i + 1) for i in range(1, 20)],
+        ([(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23), (40, 41)], longs),
+        ([(7, 7), (1, 2)], longs),
+        ([(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)], longs),
+        ([(i, i + 1) for i in range(1, 20)], longs),
+        # string ids: UTF8 binary order == codepoint order, so the driver
+        # min matches Spark's min
+        ([("b", "a"), ("b", "c")], "src string, dst string"),
     ]
-    for edges in shapes:
-        for alg in ("label", "star"):
-            monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10_000)
-            fast = _cc(spark, edges, algorithm=alg)
-            monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", -1)
-            slow = _cc(spark, edges, algorithm=alg)
-            assert fast == slow, (alg, edges[:3])
-    # string ids: UTF8 binary order == codepoint order, so the driver
-    # min matches Spark's min
-    sdf = spark.createDataFrame([("b", "a"), ("b", "c")], "src string, dst string")
-    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10_000)
-    fast = {r.id: r.cluster_id for r in connected_components(sdf).collect()}
-    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", -1)
-    slow = {r.id: r.cluster_id for r in connected_components(sdf).collect()}
-    assert fast == slow == {"a": "a", "b": "a", "c": "a"}
+    for edges, schema in shapes:
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10_000)
+        fast = _cc(spark, edges, schema)
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", -1)
+        slow = _cc(spark, edges, schema)
+        assert fast == slow, edges[:3]
+    assert fast == {"a": "a", "b": "a", "c": "a"}  # last shape: string ids
 
 
 def test_driver_fastpath_schema_and_empty(spark):
@@ -99,59 +88,38 @@ def test_driver_fastpath_schema_and_empty(spark):
     assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "bigint"]
     empty = spark.createDataFrame([], "src long, dst long")
     assert connected_components(empty).count() == 0
-    assert connected_components(empty, algorithm="star").count() == 0
 
 
 def test_star_adversarial_long_chain_converges_in_log_rounds(
-    spark, force_distributed
+    spark, force_distributed, monkeypatch
 ):
-    # a 64-node path has diameter 63: min-label propagation needs ~63
-    # rounds, the star contraction halves path length every round, so
-    # 10 rounds (~log2(64) + slack) must suffice
+    # a 64-node path has diameter 63, but the star contraction halves
+    # path length every round, so 10 rounds (~log2(64) + slack) suffice
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 10)
     edges = [(i, i + 1) for i in range(1, 64)]
-    got = _cc(spark, edges, algorithm="star", max_iter=10)
+    got = _cc(spark, edges)
     assert got == {i: 1 for i in range(1, 65)}
 
 
 def test_star_direction_and_duplicates(spark):
     # reversed + duplicate edges collapse to the same canonical set
-    got = _cc(spark, [(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)], algorithm="star")
+    got = _cc(spark, [(5, 1), (1, 5), (5, 9), (9, 5), (9, 5)])
     assert got == {1: 1, 5: 1, 9: 1}
 
 
-def test_unknown_algorithm_rejected(spark):
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(df, algorithm="bogus")
+def test_star_keeps_selfloop_only_nodes(spark, force_distributed):
+    """A node whose only edge is a self-loop is filtered out of the
+    contracted edge set; it must come back as a singleton cluster."""
+    got = _cc(spark, [(7, 7), (1, 2)])
+    assert got == {7: 7, 1: 1, 2: 1}
 
 
-def test_star_keeps_selfloop_only_nodes(spark):
-    """Both algorithms must return the same node set: a node whose only
-    edge is a self-loop used to vanish from the star path while label
-    propagation kept it (r7 review)."""
-    edges = spark.createDataFrame(
-        [(7, 7), (1, 2)], "src long, dst long"
-    )
-    for alg in ("label", "star"):
-        got = {
-            r.id: r.cluster_id
-            for r in connected_components(edges, algorithm=alg).collect()
-        }
-        assert got == {7: 7, 1: 1, 2: 1}, alg
-
-
-def test_label_checksum_survives_huge_ids(spark):
-    """Convergence sums run in DECIMAL(38,0): raw long sums of 64-bit
-    hash-style ids overflow under ANSI after a handful of rows (r7
-    review; the star path always guarded this)."""
+def test_label_checksum_survives_huge_ids(spark, force_distributed):
+    """The per-round convergence checksum sums in DECIMAL(38,0): raw long
+    sums of 64-bit hash-style values overflow under ANSI after a handful
+    of rows."""
     big = 9_100_000_000_000_000_000
-    edges = spark.createDataFrame(
-        [(big, big - 1), (big - 1, big - 2)], "src long, dst long"
-    )
-    got = {
-        r.id: r.cluster_id
-        for r in connected_components(edges, algorithm="label").collect()
-    }
+    got = _cc(spark, [(big, big - 1), (big - 1, big - 2)])
     assert got == {big: big - 2, big - 1: big - 2, big - 2: big - 2}
 
 

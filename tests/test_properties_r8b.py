@@ -341,7 +341,7 @@ def test_cluster_aware_split_eliminates_leakage(spark):
     # structural zero-leak check on the cluster-aware side
     docs = table(spark, sf, "documents")
     edges = dedup.simhash_hamming_pairs(docs).select("doc_a", "doc_b")
-    cc = connected_components(edges, src="doc_a", dst="doc_b", algorithm="star")
+    cc = connected_components(edges, src="doc_a", dst="doc_b")
     d = (
         docs.select("doc_id")
         .join(cc.select(F.col("id").alias("doc_id"), "cluster_id"), "doc_id", "left")

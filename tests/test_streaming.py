@@ -152,6 +152,79 @@ def test_streaming_kinesis_sink(spark, tmp_path):
     assert total == 1000
 
 
+def test_streaming_kinesis_sink_at_least_once_on_replay(spark, tmp_path):
+    """kinesis_stream_writer ignores epoch_id, so a micro-batch whose client
+    fails after some acks is replayed whole when the query restarts from
+    its checkpoint: every valid event arrives at least once, and the only
+    duplicates are the acks from before the failure."""
+    import glob
+    import os
+    from collections import Counter
+
+    import pytest
+
+    src = tmp_path / "events"
+    src.mkdir()
+    batch0 = list(range(1, 21))
+    batch1 = list(range(101, 121))
+    _write_events(src / "f1.parquet", [(i, _ts(1), 1, "click", 1.0) for i in batch0])
+    _write_events(
+        src / "f2.parquet",
+        [(i, _ts(2), 2, "view", 2.0) for i in batch1]
+        + [(199, _ts(2), 2, None, 2.0)],  # invalid: no event_type
+    )
+    # file-source batches follow mtime order: f1 is batch 0, f2 batch 1
+    os.utime(src / "f1.parquet", (1_700_000_000, 1_700_000_000))
+    os.utime(src / "f2.parquet", (1_700_000_100, 1_700_000_100))
+    config = KinesisSinkConfig(
+        "s", max_size_bytes=400, origin="t", retry_max_attempts=1
+    )
+
+    class DiesMidBatch(FileKinesisClient):
+        """Acks the first 3 records of batch 1, then fails every put."""
+
+        acked = 0
+
+        def put_record(self, **record):
+            if any(e["event_id"] > 100 for e in json.loads(record["Data"])):
+                if self.acked == 3:
+                    raise RuntimeError("injected put_record failure")
+                self.acked += 1
+            return super().put_record(**record)
+
+    def run(client_factory):
+        stream = read_events_stream(spark, str(src), max_files_per_trigger=1)
+        q = kinesis_stream_writer(
+            envelope_payload(stream, ts_col="ts", origin="t"),
+            config,
+            client_factory=client_factory,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        ).trigger(availableNow=True).start()
+        q.awaitTermination()
+
+    def delivered(spool):
+        return Counter(
+            e["event_id"]
+            for f in glob.glob(f"{spool}/*.json")
+            for e in json.loads(json.load(open(f))["Data"])
+        )
+
+    spool1, spool2 = str(tmp_path / "spool1"), str(tmp_path / "spool2")
+    with pytest.raises(Exception):
+        run(lambda cfg: DiesMidBatch(spool1))
+    run(lambda cfg: FileKinesisClient(spool2))  # restart, same checkpoint
+
+    before, after = delivered(spool1), delivered(spool2)
+    acked_early = set(before) - set(batch0)
+    assert acked_early and acked_early < set(batch1)  # failed mid-batch
+    assert before == Counter(batch0) + Counter(acked_early)
+    assert after == Counter(batch1)  # batch 1 replayed whole, batch 0 not
+    total = before + after
+    assert set(total) == set(batch0) | set(batch1)
+    assert {i for i, n in total.items() if n > 1} == acked_early
+    assert max(total.values()) == 2
+
+
 def test_stateful_tracker_accumulates_across_batches(spark, tmp_path):
     """applyInPandasWithState: per-user state persists across micro-batches;
     the final update equals the batch aggregate."""
