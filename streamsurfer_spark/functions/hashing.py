@@ -11,30 +11,19 @@ both engines:
 
 Seeding = suffixing the input with '#<seed>'.
 
-At 100 TB md5 is ~3× slower than xxhash64; swap `md5_long64` for
-`F.xxhash64` in production paths where oracle parity is not required (the
-operators take a `hash_fn` parameter for exactly this).
+Every signature-family operator (MinHash, SimHash, hashed shingles,
+sampling buckets, rolling n-gram hashes) calls these md5 forms directly:
+one hash family, the same bits in Spark, DuckDB and Python.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 MOD_PRIME = 1_000_000_007
-
-# Production hash swap (optimization guide §4: md5 is ~3× slower than
-# xxhash64 at the per-token volume of the signature family). Default stays
-# md5 so every oracle-checked hash is unchanged; set SPARK_GRAFT_HASH64=
-# xxhash64 BEFORE import in production deployments where DuckDB parity is
-# not required. The xxhash64 form is masked to the same 60-bit positive
-# domain as md5_long64 so every downstream invariant (non-negative values,
-# `% P31` sign, bucket arithmetic) holds identically.
-HASH64_IMPL = os.environ.get("SPARK_GRAFT_HASH64", "md5").lower()
-_MASK60 = (1 << 60) - 1
 
 
 def md5_long64(col: Column) -> Column:
@@ -46,22 +35,6 @@ def md5_long64_expr(sql_expr: str) -> str:
     """Same as md5_long64, as a SQL-expression fragment (for use inside
     higher-order lambdas where Column API can't reach)."""
     return f"cast(conv(substring(md5({sql_expr}), 1, 15), 16, 10) as bigint)"
-
-
-def hash64(col: Column) -> Column:
-    """The signature-family hash: md5_long64 by default (oracle-portable),
-    xxhash64 masked to the same 60-bit positive domain under
-    SPARK_GRAFT_HASH64=xxhash64 (production; no DuckDB twin)."""
-    if HASH64_IMPL == "xxhash64":
-        return F.xxhash64(col).bitwiseAND(F.lit(_MASK60))
-    return md5_long64(col)
-
-
-def hash64_expr(sql_expr: str) -> str:
-    """SQL-fragment twin of :func:`hash64`."""
-    if HASH64_IMPL == "xxhash64":
-        return f"(xxhash64({sql_expr}) & {_MASK60})"
-    return md5_long64_expr(sql_expr)
 
 
 def duckdb_md5_long64(sql_expr: str) -> str:

@@ -17,11 +17,8 @@ for the 100 TB north star:
   self-join on distinct shingles. At 100 TB you run it AFTER LSH pruning;
   at fixture scale we run it on everything sharing >=1 shingle.
 
-Hashing is the md5-based portable scheme from functions/hashing.py so every
-operator is DuckDB-oracle-checkable; for production throughput set
-SPARK_GRAFT_HASH64=xxhash64 (functions/hashing.py hash64_expr — ≈3× faster,
-same topology and the same 60-bit positive domain; oracle parity is then
-deliberately forfeited, so fixture verification keeps the md5 default).
+Hashing is the md5-based portable scheme from functions/hashing.py, so
+every operator is DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
@@ -32,7 +29,7 @@ from pyspark.sql import DataFrame
 from streamsurfer_spark.functions.hashing import (
     P31,
     affine_params,
-    hash64_expr,
+    md5_long64_expr,
     md5_long64_py,
 )
 from streamsurfer_spark.functions.rounding import scaled_round
@@ -64,7 +61,7 @@ P61 = 2_305_843_009_213_693_951
 # each other AND with the DuckDB twin (queries/llm_q.py
 # duck_hashed_shingle_set) for the oracle gate to hold — previously two
 # character-identical copies that could silently drift (r7 review).
-_TOKEN_HASH_EXPR = f"transform(toks, t -> {hash64_expr('t')} % {P31})"
+_TOKEN_HASH_EXPR = f"transform(toks, t -> {md5_long64_expr('t')} % {P31})"
 _P61_SHINGLE_EXPR = (
     f"transform(sequence(1, greatest(size(toks) - {SHINGLE_N - 1}, 1)),"
     f" i -> (try_element_at(th_, i) * {SHINGLE_C1}) % {P61}"
@@ -116,7 +113,7 @@ def minhash_signature(df: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
     shingle window and all seeds. try_element_at: trailing shingles of
     short documents treat missing tokens as hash 0 (ANSI-safe).
     """
-    th = f"transform(toks, t -> {hash64_expr('t')} % {P31})"
+    th = f"transform(toks, t -> {md5_long64_expr('t')} % {P31})"
     sh = (
         f"transform(sequence(1, greatest(size(toks) - {SHINGLE_N - 1}, 1)),"
         f" i -> ((try_element_at(th_, i) * {SHINGLE_C1}) % {P31}"
@@ -186,6 +183,7 @@ def lsh_candidate_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     bucket_cap: int = LSH_BUCKET_CAP,
+    slice_of: tuple[int, int] | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
 
@@ -200,77 +198,31 @@ def lsh_candidate_pairs(
     buffer ever holds an unbounded bucket. The survivors pair up via a
     same-key collect_list (reuses the window's partitioning — no extra
     exchange) and a pure expression expansion.
-    """
-    from pyspark.sql import Window
 
-    bands = lsh_bands(minhash_signature(with_shingles(df, text_col)), id_col)
-    w = Window.partitionBy("band", "band_key").orderBy(id_col)
-    capped = (
-        bands.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= bucket_cap)
-        .drop("_rn")
-    )
-    buckets = capped.groupBy("band", "band_key").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) ->"
-                " transform(slice(ids, i + 2, size(ids)), y -> struct(x, y))))"
-            )
-        ).alias("p")
-    )
-    return (
-        pairs.select(F.col("p.x").alias("doc_a"), F.col("p.y").alias("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
-
-
-def lsh_band_pair_partials(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_cap: int = LSH_BUCKET_CAP,
-    part: int = 0,
-    n_parts: int = 1,
-) -> DataFrame:
-    """ONE bounded pass of the LSH band exchange: the slice-of-bucket-space
-    partials that sum to lsh_candidate_pairs' n_shared_bands.
-
-    The monolithic band exchange shuffles N_BANDS rows per document —
-    corpus-LINEAR scratch, and after the shingle exchange was sliced it
-    became qp08's binding scratch stage (BASELINE.md Round 12 finding 2:
-    a pass-count-INDEPENDENT ~53 GB floor at 5M docs). Same recipe as
-    shingle_intersection_partials: keep only bucket keys with
-    pmod(xxhash64(band, band_key), n_parts) == part, filtered AFTER the
-    per-row band explode but BEFORE the bucket exchange, so the shuffle
-    itself shrinks to the slice. Slice self-containment: the per-bucket
-    cap window, the same-key collect_list, and the pair expansion are
-    all (band, band_key)-keyed and a bucket lives wholly inside one
+    ``slice_of=(p, n)`` keeps only bucket keys with
+    pmod(xxhash64(band, band_key), n) == p, filtered after the per-row
+    band explode but BEFORE the bucket exchange, so the shuffle itself
+    shrinks to the slice — the band exchange is corpus-linear scratch
+    (N_BANDS rows per document), the binding stage of the bounded qp08
+    recipe once its shingle exchange was sliced (BASELINE.md Round 12
+    finding 2). The cap window, the collect_list and the pair expansion
+    are all (band, band_key)-keyed and a bucket lives wholly inside one
     slice, so each slice is EXACTLY the global computation restricted to
-    its buckets; a pair's shared-band count sums across slices
-    (disjoint bucket sets):
-
-        n_shared_bands(a, b) = Σ_p n_shared_p(a, b)
-
-    xxhash64 (fixed seed, documented stable) over the bucket key is the
-    uniform slicer — band_key is itself a minhash digest string, so
-    slices are balanced. The per-slice CPU re-pays the signature math
-    each pass (the same passes-vs-scratch trade the shingle slices
-    make); signature cost is per-row expression work that scales out,
-    scratch is a single-box ceiling — the right side of the trade at
-    100 TB. Used by pipeline_q.qp08_canonical_map_bounded; equality
-    with the monolithic plan is pinned by tests/test_qp08_bounded.py
-    at two SFs × two pass counts.
+    its buckets, and a pair's shared-band count sums across slices:
+    n_shared_bands(a, b) = Σ_p n_shared_p(a, b). xxhash64 (fixed seed)
+    over the minhash-digest bucket key keeps slices balanced. Each slice
+    re-pays the per-row signature math: CPU that scales out, traded for
+    scratch disk, the single-box ceiling. Used by
+    pipeline_q.qp08_canonical_map_bounded; pinned by
+    tests/test_qp08_bounded.py.
     """
     from pyspark.sql import Window
 
     bands = lsh_bands(minhash_signature(with_shingles(df, text_col)), id_col)
-    if n_parts > 1:
+    if slice_of is not None:
+        p, n = slice_of
         bands = bands.where(
-            F.pmod(F.xxhash64("band", "band_key"), F.lit(n_parts)) == F.lit(part)
+            F.pmod(F.xxhash64("band", "band_key"), F.lit(n)) == F.lit(p)
         )
     w = Window.partitionBy("band", "band_key").orderBy(id_col)
     capped = (
@@ -321,7 +273,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     """
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("token")
-    ).withColumn("h", F.expr(hash64_expr("token")))
+    ).withColumn("h", F.expr(md5_long64_expr("token")))
     return toks.groupBy(id_col).agg(
         F.expr(_simhash_expr("shiftright(h, {b})")).alias("simhash")
     )

@@ -17,11 +17,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from streamsurfer_spark.functions.hashing import hash64
+from streamsurfer_spark.functions.hashing import md5_long64
 
 
 def _key_hash(id_col: str) -> Column:
-    return hash64(F.col(id_col).cast("string"))
+    return md5_long64(F.col(id_col).cast("string"))
 
 
 def hash_sample(df: DataFrame, id_col: str, rate_pct: int) -> DataFrame:
@@ -141,7 +141,7 @@ def weighted_sample(
         raise ValueError("k must be >= 1")
     p = WEIGHTED_MOD
     h = (
-        hash64(F.concat(F.col(id_col).cast("string"), F.lit(f"#ws{seed}")))
+        md5_long64(F.concat(F.col(id_col).cast("string"), F.lit(f"#ws{seed}")))
         % p
     )
     w = F.col(weight_col).cast("double")
@@ -177,7 +177,7 @@ def split_col(
     if not 0 < train_pct + val_pct <= 100:
         raise ValueError("train_pct + val_pct must be in (0, 100]")
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    bucket = hash64(c.cast("string")) % 100
+    bucket = md5_long64(c.cast("string")) % 100
     return (
         # a NULL id hashes to NULL, both bucket comparisons are NULL, and
         # the row would silently fall through to 'test' — leakage-relevant

@@ -13,8 +13,8 @@ from pyspark.sql import Column, DataFrame
 from streamsurfer_spark.functions.hashing import (
     MOD_PRIME,
     P31,
-    hash64,
-    hash64_expr,
+    md5_long64,
+    md5_long64_expr,
     md5_long64_py,
 )
 from streamsurfer_spark.functions.rounding import scaled_round
@@ -357,7 +357,7 @@ def dsir_importance(
     corpus-sized shuffle is the tf groupBy on a uniform composite key.
     Final groupBy(doc) partial-aggregates on a unique key.
     """
-    th = f"transform(toks, t -> {hash64_expr('t')} % {P31})"
+    th = f"transform(toks, t -> {md5_long64_expr('t')} % {P31})"
     bk = (
         "case when size(toks) < 2 then cast(array() as array<bigint>) else "
         "transform(sequence(1, size(toks) - 1),"
@@ -434,7 +434,7 @@ def document_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     key is doc_id (unique) so partial aggregation does all the work.
     """
     toks = df.select("doc_id", F.posexplode(tokens(text_col)).alias("pos", "token"))
-    term = (hash64(F.col("token")) % MOD_PRIME) * (F.col("pos") + 1) % MOD_PRIME
+    term = (md5_long64(F.col("token")) % MOD_PRIME) * (F.col("pos") + 1) % MOD_PRIME
     return (
         toks.groupBy("doc_id")
         .agg((F.sum(term) % MOD_PRIME).alias("fingerprint"))

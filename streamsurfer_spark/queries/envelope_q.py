@@ -319,13 +319,11 @@ def _wire_roundtrip(
     stream: str,
     spool_prefix: str,
     use_put_records: bool,
-    jvm_consume: bool = False,
 ) -> DataFrame:
     """Shared body of qv09/qv10: events → envelope → greedy chunking →
     JSON-array records through the REAL sink client seam (PutRecord per
     chunk, or the batched PutRecords scale path) → read-back through the
-    ``kinesis_replay`` DataSource (qv09) or the JVM ``spool_items`` scan
-    path (qv10) → typed parse → per-event-type aggregate.
+    JVM ``spool_items`` scan → typed parse → per-event-type aggregate.
 
     NOTE: constructing this query is EFFECTFUL — the sink spool is
     written eagerly (a foreachPartition job) before the returned
@@ -343,7 +341,7 @@ def _wire_roundtrip(
         envelope_payload,
         write_batch_to_kinesis,
     )
-    from streamsurfer_spark.sources.kinesis_source import register
+    from streamsurfer_spark.sources.kinesis_source import spool_items
 
     ev = table(spark, sf_dir, "events")
     spool = scratch_dir(spool_prefix)
@@ -356,15 +354,7 @@ def _wire_roundtrip(
         use_put_records=use_put_records,
     )
 
-    if jvm_consume:
-        from streamsurfer_spark.sources.kinesis_source import spool_items
-
-        items = spool_items(spark, spool)
-    else:
-        register(spark)
-        items = (
-            spark.read.format("kinesis_replay").option("spool_dir", spool).load()
-        )
+    items = spool_items(spark, spool)
     p = F.from_json(
         "item",
         "event_type string, user_id long, value double,"
@@ -391,8 +381,8 @@ def qv09_consume_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (validate + origin + timestamp stamp, main.go:174-186) → greedy
     chunking → one JSON-array record per chunk (main.go:266-276) spooled
     through the REAL sink client seam → read back with the
-    ``kinesis_replay`` Python DataSource (one row per envelope item) →
-    typed parse → per-event-type aggregate.
+    ``spool_items`` scan (one row per envelope item) → typed parse →
+    per-event-type aggregate.
 
     The oracle recomputes the SAME aggregates straight from the `events`
     table — a hash match therefore proves the sink+source pair is
@@ -409,14 +399,12 @@ def qv09_consume_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def qv10_put_records_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """qv09's loop through the OTHER half of each seam: the batched
-    PutRecords sink path (up to 500 chunks per call, per-record
-    partial-failure retry — sink/kinesis.py flush_put_records) and the
-    JVM ``spool_items`` consume scan (no Python row loop). The oracle
-    recomputes the aggregates from `events` with a distinct origin
-    stamp, so a hash match proves BOTH scale paths lossless; qv09 covers
-    the PutRecord + DataSource pair, and the row-level differential test
-    in tests/test_kinesis_source.py ties the two consume paths together.
+    """qv09's loop through the OTHER sink seam: the batched PutRecords
+    path (up to 500 chunks per call, per-record partial-failure retry —
+    sink/kinesis.py flush_put_records), read back through the same
+    ``spool_items`` scan. The oracle recomputes the aggregates from
+    `events` with a distinct origin stamp, so a hash match proves the
+    PutRecords path lossless; qv09 covers the PutRecord path.
     """
     return _wire_roundtrip(
         spark,
@@ -425,7 +413,6 @@ def qv10_put_records_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qv10-stream",
         "qv10_spool_",
         True,
-        jvm_consume=True,
     )
 
 
@@ -462,7 +449,7 @@ QUERIES: dict[str, QuerySpec] = {
     "qv09_consume_roundtrip": QuerySpec(
         qv09_consume_roundtrip,
         QV09_SQL,
-        "produce→consume wire loop: sink spool → kinesis_replay → aggregate",
+        "produce→consume wire loop: sink spool → spool_items → aggregate",
     ),
     "qv10_put_records_roundtrip": QuerySpec(
         qv10_put_records_roundtrip,

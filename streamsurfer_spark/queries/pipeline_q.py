@@ -796,11 +796,8 @@ QP06_SQL = _qp06_sql()
 # gated hint every manifest join would plan as a corpus-wide sort-merge —
 # the r10-measured 3× trap that kept qp07 monolithic until r14. Above the
 # cap the planner's shuffle join runs unchanged (a 100 TB survivor
-# manifest is never broadcast). Overridable through the environment for
-# cluster tuning.
-MANIFEST_BROADCAST_ROW_CAP = int(
-    os.environ.get("SPARK_GRAFT_MANIFEST_BROADCAST_ROW_CAP", str(4_000_000))
-)
+# manifest is never broadcast).
+MANIFEST_BROADCAST_ROW_CAP = 4_000_000
 
 
 def _training_mix_stages(
@@ -1262,7 +1259,7 @@ def qp08_canonical_map_bounded(
     pmod(shingle, n_passes) == p (the distinct, the df-cap window, and
     the self-join are all shingle-keyed, so each slice is self-contained
     and EXACTLY the global computation restricted to its shingles) and —
-    since r13 (r12 verdict item 4) — dedup.lsh_band_pair_partials over
+    since r13 (r12 verdict item 4) — dedup.lsh_candidate_pairs over
     the bucket-key slice pmod(xxhash64(band, band_key), n_passes) == p.
 
     Partials are FOLDED into running accumulators between passes
@@ -1356,7 +1353,7 @@ def qp08_canonical_map_bounded(
         # uniform hashes over disjoint key spaces, so one loop bounds
         # both corpus-linear exchanges at ~1/n_passes each (r12 verdict
         # item 4)
-        lsh_p = dedup.lsh_band_pair_partials(docs, part=p, n_parts=n_passes)
+        lsh_p = dedup.lsh_candidate_pairs(docs, slice_of=(p, n_passes))
         fold("lsh", lsh_p, ["doc_a", "doc_b"], "n_shared_bands", p)
         # release this pass's shuffle files before the next pass: drop
         # the only references, then ask the JVM to GC so ContextCleaner

@@ -8,7 +8,7 @@ Design notes (100 TB target):
   stamps UTC strings — /root/reference/main.go:179) and oracle parity.
 - shuffle.partitions is a *local* default sized to the thread count. On
   a real cluster, raise `spark.sql.adaptive.coalescePartitions.
-  initialPartitionNum` (or SPARK_GRAFT_SHUFFLE_PARTITIONS here) so
+  initialPartitionNum` (or pass `get_spark(shuffle_partitions=...)`) so
   partitions scale with data and AQE coalesces the small stages back
   down. Measured on this box (30× probe, ql54): 128 partitions cut a
   GC-bound linear-volume shuffle 40%, but blanket-raising
@@ -92,14 +92,11 @@ def get_spark(app_name: str = "streamsurfer-spark", *, shuffle_partitions: int |
 
     Local mode uses $SPARK_GRAFT_CPUS threads; on a cluster the same
     configuration is valid — nothing here assumes single-node.
+    ``shuffle_partitions`` defaults to the thread count.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
-        env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "")
-        if env_parts.isdigit() and int(env_parts) > 0:
-            shuffle_partitions = int(env_parts)
-        else:
-            shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

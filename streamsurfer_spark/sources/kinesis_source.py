@@ -2,43 +2,36 @@
 
 The reference is producer-only (its entire surface is enqueue → chunk →
 PutRecord, /root/reference/main.go:197-289); its consumers are out of
-frame. This module closes the engine-side gap: a custom Python DataSource
-(format "kinesis_replay") that UNBATCHES the exact wire format the sink
-ships — each Kinesis record's Data is a JSON ARRAY of envelope objects
-(one PutRecord per greedy chunk, main.go:266-276) — into one row per
-envelope item, ready for the existing envelope/from_json pipeline.
+frame. This module closes the engine-side gap. Each Kinesis record's Data
+is a JSON ARRAY of envelope objects (one PutRecord per greedy chunk,
+main.go:266-276); every consume path UNBATCHES it into one row per
+envelope item (SCHEMA below), ready for the existing envelope/from_json
+pipeline. One path per job:
 
-Two record providers behind one format:
-
-- **spool replay** (always available; the test/replay path): a directory
-  of JSON files as written by ``sink.kinesis.FileKinesisClient`` — so the
+- **batch scan of a spool** — :func:`spool_items`: a directory of JSON
+  files as written by ``sink.kinesis.FileKinesisClient`` (so the
   sink→source round trip is testable end-to-end in this container, the
-  same seam philosophy as the reference's mocks/KinesisQueue.go. Batch
-  reads take one input partition per spool file; the micro-batch stream
-  reader's offset is the count of consumed files (sorted order), giving
-  deterministic replay with real offset/commit bookkeeping.
-- **boto3** (import-gated; absent in this container): batch reader over
-  real shards — one input partition per shard, TRIM_HORIZON iterator
-  drained executor-side. Streaming consumption against live Kinesis is
-  deliberately NOT implemented here: the scale pattern for 100 TB is a
-  landing zone (Firehose/KCL → object store) read by the ordinary file
-  stream source, not a Python-loop consumer; the batch shard reader
-  exists for backfills and parity checks.
+  same seam philosophy as the reference's mocks/KinesisQueue.go), read
+  as pure JVM expressions (``spark.read.json`` →
+  ``posexplode(from_json(Data, 'array<variant>'))`` → ``to_json``), no
+  Python row loop. qv09 and qv10 hash-gate it against the oracle.
+- **micro-batch replay of a spool** — the ``kinesis_replay`` Python
+  DataSource's stream reader: offset = count of consumed files (sorted
+  order), giving deterministic replay with real offset/commit
+  bookkeeping.
+- **boto3 shard backfill** (import-gated; absent in this container) —
+  the ``kinesis_replay`` batch reader with ``stream_name``: one input
+  partition per shard (parallelism tracks the stream's own sharding),
+  TRIM_HORIZON iterator drained executor-side. Streaming consumption
+  against live Kinesis is deliberately NOT implemented here: the scale
+  pattern for 100 TB is a landing zone (Firehose/KCL → object store)
+  read by the ordinary file stream source, not a Python-loop consumer.
 
-Scale notes: the boto3 reader takes one partition per shard (parallelism
-tracks the stream's own sharding); the spool batch reader groups files
-into at most ``max_partitions`` (default 64) input partitions — the 30×
-probe measured per-file partitioning as super-linear in wall clock
-(BASELINE.md round-7 rows). The DataSource's JSON-array unbatching is
-per-record Python — fine for replay/backfill with offset bookkeeping —
-but the 100 TB consume-side SCAN path is :func:`spool_items` below: the
-same unbatch as pure JVM expressions (``spark.read.json`` →
-``posexplode(from_json(Data, 'array<variant>'))`` → ``to_json``), no
-Python row loop anywhere. The two paths are JSON-equal row for row on
-sink-produced spools (metadata byte-exact, items modulo variant's
-integral-double normalization; pinned by
-tests/test_kinesis_source.py::test_spool_items_matches_datasource) and
-qv09/qv10 hash-gate one path each against the same oracle.
+A batch ``kinesis_replay`` read with ``spool_dir`` raises and names
+:func:`spool_items`. The per-record Python unbatch (``_unbatch`` over
+``_read_spool_file``) stays as the stream reader's body and as the
+pure-Python reference the JVM scan is tested against
+(tests/test_kinesis_source.py::test_spool_items_matches_datasource).
 """
 
 from __future__ import annotations
@@ -97,47 +90,6 @@ def _read_spool_file(spool_dir: str, fname: str, seq: int):
         rec.get("PartitionKey", ""),
         seq,
     )
-
-
-class _SpoolPartition(InputPartition):
-    """A GROUP of (fname, seq) pairs, not one file: the 30× probe measured
-    one-partition-per-file as super-linear (3.65× wall for 3× data — every
-    spool file is one sink record, so file count grows with the corpus and
-    per-task Python worker round trips dominate). Bounded grouping keeps
-    task count constant while each file still carries its global sorted
-    seq."""
-
-    def __init__(self, files: list) -> None:
-        super().__init__(files)
-
-
-class _SpoolReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.spool_dir = options["spool_dir"]
-        self.max_partitions = int(options.get("max_partitions", 64))
-        if self.max_partitions < 1:
-            # 0 would ZeroDivisionError in partitions(); a negative value
-            # would silently flip the grouping back to one-partition-per-
-            # file — the exact unbounded-task regime the cap exists to
-            # prevent
-            raise ValueError("max_partitions must be >= 1")
-
-    def partitions(self):  # noqa: D102 — API hook
-        files = list(enumerate(_spool_files(self.spool_dir)))
-        per = max(1, -(-len(files) // self.max_partitions))
-        return [
-            _SpoolPartition([(f, i) for i, f in files[lo : lo + per]])
-            for lo in range(0, len(files), per)
-        ]
-
-    def read(self, partition):  # noqa: D102 — API hook
-        if partition is None:
-            # an EMPTY spool: Spark substitutes [None] for an empty
-            # partitions() list and still calls read once
-            # (pyspark worker plan_data_source_read: len==0 → [None])
-            return
-        for fname, seq in partition.value:
-            yield from _read_spool_file(self.spool_dir, fname, seq)
 
 
 class _ShardPartition(InputPartition):
@@ -274,9 +226,11 @@ class _SpoolStreamReader(SimpleDataSourceStreamReader):
 
 
 class KinesisReplaySource(DataSource):
-    """``spark.read.format("kinesis_replay")`` with either
-    ``.option("spool_dir", ...)`` (local replay of the sink's spool) or
-    ``.option("stream_name", ...)`` (+ region; boto3 shard backfill)."""
+    """``spark.read.format("kinesis_replay")`` with
+    ``.option("stream_name", ...)`` (+ region; boto3 shard backfill), or
+    ``spark.readStream.format("kinesis_replay")`` with
+    ``.option("spool_dir", ...)`` (micro-batch replay of the sink's
+    spool). Batch reads of a spool go through :func:`spool_items`."""
 
     @classmethod
     def name(cls) -> str:
@@ -287,7 +241,10 @@ class KinesisReplaySource(DataSource):
 
     def reader(self, schema):  # noqa: D102 — API hook
         if "spool_dir" in self.options:
-            return _SpoolReader(self.options)
+            raise ValueError(
+                "batch kinesis_replay reads take stream_name; scan a spool_dir"
+                " with sources.kinesis_source.spool_items(spark, spool_dir)"
+            )
         if "stream_name" in self.options:
             return _Boto3Reader(self.options)
         raise ValueError("kinesis_replay needs spool_dir or stream_name")
@@ -308,18 +265,18 @@ def register(spark) -> None:
 def spool_items(spark, spool_dir: str):
     """JVM-side unbatch of a sink spool — the consume-side SCAN path.
 
-    Same output contract as the ``kinesis_replay`` batch reader (SCHEMA
-    above), but every step is a codegen expression: the spool records load
-    through the JVM json reader, the JSON-array ``Data`` explodes via
+    Same output contract as the Python unbatch (SCHEMA above), but every
+    step is a codegen expression: the spool records load through the JVM
+    json reader, the JSON-array ``Data`` explodes via
     ``from_json(..., 'array<variant>')`` (variant preserves the producer's
     key order — the sink's envelope render sorts keys, main.go's envelope
     equivalent — so ``to_json`` re-emits the Python path's sorted-key
-    bytes), and ``record_seq`` reproduces the reader's sorted-filename
-    numbering by broadcast-joining a driver-built (basename → seq) map —
-    the listing is driver-side metadata either way (the DataSource reader
-    derives seq from the same listdir), and the tiny broadcast avoids the
-    single-partition global window a row_number derivation would force on
-    the scan path.
+    bytes), and ``record_seq`` reproduces the stream reader's
+    sorted-filename numbering by broadcast-joining a driver-built
+    (basename → seq) map — the listing is driver-side metadata either way
+    (the stream reader derives seq from the same listdir), and the tiny
+    broadcast avoids the single-partition global window a row_number
+    derivation would force on the scan path.
 
     Failure parity with the Python path (r7 review): a record whose
     ``Data`` is missing or not valid JSON FAILS LOUDLY (``raise_error``
@@ -331,9 +288,9 @@ def spool_items(spark, spool_dir: str):
     Number-rendering caveat: variant normalizes integral doubles
     (``11.0`` → ``11``) and the JVM exponent grammar differs from
     Python's (``1.0E-7`` vs ``1e-07``), so ``item`` is JSON-EQUAL to the
-    DataSource path's bytes, not byte-identical — invisible to the
-    from_json consumers downstream. The differential test pins JSON
-    equality on a real spool; qv10 hash-gates this path end-to-end.
+    Python path's bytes, not byte-identical — invisible to the from_json
+    consumers downstream. The differential test pins JSON equality on a
+    real spool; qv09 and qv10 hash-gate this path end-to-end.
     """
     import pyspark.sql.functions as F
 
@@ -341,7 +298,7 @@ def spool_items(spark, spool_dir: str):
     if not files:
         # an EMPTY spool (producer saw zero rows): the *.json glob would
         # raise PATH_NOT_FOUND in the JVM reader — return the same-schema
-        # empty frame the DataSource path produces (empty-sweep r7)
+        # empty frame (empty-sweep r7)
         return spark.createDataFrame([], SCHEMA)
 
     seq_map = spark.createDataFrame(

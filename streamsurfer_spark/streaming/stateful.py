@@ -100,75 +100,3 @@ def user_activity_tracker(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-TYPE_COUNTS_OUTPUT = "user_id bigint, event_type string, n_events bigint"
-
-
-def event_type_counter(events: DataFrame) -> DataFrame:
-    """Per-(user, event_type) running counts via transformWithStateInPandas
-    — Spark 4's arbitrary-state processor API (the successor surface to
-    applyInPandasWithState above; both are kept as first-class operators).
-
-    State is a per-user MapState(event_type → n): the state store holds one
-    map entry per (key, map-key), so hot users with many types stay O(types)
-    — no list growth with event volume. Each micro-batch emits only the
-    (user, type) rows that changed (update mode), which is what makes the
-    downstream delta stream cheap.
-
-    Runtime requirements (import-gated in tests, per environment policy):
-    the transformWithState Python worker needs the ``protobuf`` package,
-    and the operator only runs on the RocksDB state store provider (set
-    below as a runtime conf — vanilla HDFS-backed state is unsupported
-    for this API).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState("counts", "event_type string", "n bigint")
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            delta: dict[str, int] = {}
-            for pdf in rows:
-                for et, cnt in pdf.groupby("event_type").size().items():
-                    delta[et] = delta.get(et, 0) + int(cnt)
-            out = {"user_id": [], "event_type": [], "n_events": []}
-            for et in sorted(delta):
-                n = delta[et]
-                if self._counts.containsKey((et,)):
-                    n += self._counts.getValue((et,))[0]
-                self._counts.updateValue((et,), (n,))
-                out["user_id"].append(user_id)
-                out["event_type"].append(et)
-                out["n_events"].append(n)
-            yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB provider, and the provider
-    # class is session-global (no per-query override exists). Only set it
-    # when the session has no EXPLICIT provider choice: silently rewriting
-    # an existing setting would break checkpoint recovery of unrelated
-    # streaming queries started under the old provider (state format
-    # incompatibility — r7 review). A caller who pinned a different
-    # provider gets Spark's own loud unsupported-provider error instead.
-    conf = events.sparkSession.conf
-    try:
-        if conf.get("spark.sql.streaming.stateStore.providerClass", None) is None:
-            conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
-    except Exception:
-        pass
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeCounts(),
-        outputStructType=TYPE_COUNTS_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -1,8 +1,9 @@
-"""Consume-side round trip: sink spool → kinesis_replay source.
+"""Consume-side round trip: sink spool → spool_items / kinesis_replay.
 
 The sink ships one JSON-array record per greedy chunk (the reference's
 wire format, main.go:266-276); the source must unbatch every record back
-into the exact envelope items — batch AND micro-batch stream paths.
+into the exact envelope items — the batch scan (spool_items) AND the
+micro-batch stream reader (kinesis_replay).
 """
 
 from __future__ import annotations
@@ -34,17 +35,21 @@ def test_spool_batch_round_trip(spark, tmp_path):
     spool = str(tmp_path / "spool")
     expected = _fill_spool(spark, spool)
 
-    from streamsurfer_spark.sources.kinesis_source import register
+    from streamsurfer_spark.sources.kinesis_source import spool_items
 
-    register(spark)
-    out = spark.read.format("kinesis_replay").option("spool_dir", spool).load()
-    rows = out.collect()
+    rows = spool_items(spark, spool).collect()
 
-    assert sorted(r.item for r in rows) == expected
+    # item is JSON-equal to the envelope render (variant normalizes
+    # integral doubles — see spool_items), so compare with every number
+    # parsed as float
+    def canon(item: str) -> str:
+        return json.dumps(json.loads(item, parse_int=float), sort_keys=True)
+
+    assert sorted(canon(r.item) for r in rows) == sorted(map(canon, expected))
     # every item is the sink's envelope: origin stamped, parseable JSON
     assert all(json.loads(r.item)["origin"] == "rt" for r in rows)
     # metadata columns land in the RIGHT columns (a round-6 review found
-    # both readers passing them to _unbatch in rotated order): stream is
+    # the readers passing them to _unbatch in rotated order): stream is
     # the configured stream name, shard_id the provider's shard, and
     # partition_key the sink's per-record UUID (hex-dashed, not a name)
     assert {r.stream for r in rows} == {"rt-stream"}
@@ -119,68 +124,61 @@ def test_boto3_gated_and_option_validation(spark):
         KinesisReplaySource({"stream_name": "s"}).simpleStreamReader(None)
 
 
+def test_batch_spool_read_points_to_spool_items(spark, tmp_path):
+    """A batch kinesis_replay read of a spool_dir fails at planning and
+    names the one batch scan of a spool, spool_items."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from streamsurfer_spark.sources.kinesis_source import (
+        KinesisReplaySource,
+        register,
+    )
+
+    spool = str(tmp_path)
+    with pytest.raises(ValueError, match="spool_items"):
+        KinesisReplaySource({"spool_dir": spool}).reader(None)
+    register(spark)
+    with pytest.raises(AnalysisException, match="spool_items"):
+        spark.read.format("kinesis_replay").option("spool_dir", spool).load().collect()
+
+
 def test_spool_items_matches_datasource(spark, tmp_path):
     """The JVM scan path (spool_items: read.json → from_json array<variant>
-    → posexplode → to_json) must agree with the Python DataSource unbatch
-    on a real sink-produced spool — the equivalence the 100 TB
-    consume-side scan relies on (r7: the one Python-loop row path in the
-    repo, now with a codegen twin). Metadata columns are byte-exact; the
-    item payloads are JSON-equal (variant normalizes integral doubles,
-    "11.0" → "11" — invisible to the from_json consumers downstream, and
-    the only render difference on the envelope wire domain)."""
-    from streamsurfer_spark.sources.kinesis_source import register, spool_items
+    → posexplode → to_json) must agree with the pure-Python unbatch
+    (_read_spool_file over the sorted spool listing, the stream reader's
+    body) on a real sink-produced spool. Metadata columns are byte-exact;
+    the item payloads are JSON-equal (variant normalizes integral
+    doubles, "11.0" → "11" — invisible to the from_json consumers
+    downstream, and the only render difference on the envelope wire
+    domain)."""
+    from streamsurfer_spark.sources.kinesis_source import (
+        SCHEMA,
+        _read_spool_file,
+        _spool_files,
+        spool_items,
+    )
 
     spool = str(tmp_path / "spool")
     _fill_spool(spark, spool)
 
-    register(spark)
-    ds = spark.read.format("kinesis_replay").option("spool_dir", spool).load()
+    py_rows = [
+        row
+        for seq, fname in enumerate(_spool_files(spool))
+        for row in _read_spool_file(spool, fname, seq)
+    ]
     jvm = spool_items(spark, spool)
 
-    assert ds.columns == jvm.columns
+    assert jvm.columns == [c.split()[0] for c in SCHEMA.split(",")]
 
     def canon(rows):
-        keyed = sorted(
-            ((r.stream, r.shard_id, r.partition_key, r.record_seq, r.item_index),
-             json.loads(r.item))
-            for r in rows
-        )
-        return keyed
+        return sorted((tuple(r[:5]), json.loads(r[5])) for r in rows)
 
-    ds_rows, jvm_rows = canon(ds.collect()), canon(jvm.collect())
-    assert len(ds_rows) == len(jvm_rows) > 0
+    py_canon, jvm_canon = canon(py_rows), canon(jvm.collect())
+    assert len(py_canon) == len(jvm_canon) > 0
     # python dict equality compares 11.0 == 11 numerically — exactly the
     # normalization tolerance we want
-    assert ds_rows == jvm_rows
-
-
-def test_spool_partitions_are_bounded_groups(tmp_path):
-    """Spool batch reads group files into at most max_partitions input
-    partitions (default 64) — one-partition-per-file measured super-linear
-    at the 30× probe (BASELINE.md round-7). Grouping must preserve each
-    file's GLOBAL sorted seq and cover every file exactly once."""
-    import os
-
-    from streamsurfer_spark.sources.kinesis_source import _SpoolReader
-
-    spool = str(tmp_path / "spool")
-    os.makedirs(spool)
-    names = [f"rec_{i:05d}.json" for i in range(200)]
-    for n in names:
-        with open(os.path.join(spool, n), "w") as f:
-            f.write('{"Data": "[]"}')
-
-    parts = _SpoolReader({"spool_dir": spool}).partitions()
-    assert len(parts) <= 64
-    flat = [pair for p in parts for pair in p.value]
-    assert flat == [(n, i) for i, n in enumerate(names)]
-
-    # explicit option honored
-    parts4 = _SpoolReader(
-        {"spool_dir": spool, "max_partitions": "4"}
-    ).partitions()
-    assert len(parts4) == 4
-    assert [pair for p in parts4 for pair in p.value] == flat
+    assert py_canon == jvm_canon
 
 
 def test_spool_items_failure_parity(spark, tmp_path):
@@ -257,10 +255,13 @@ def test_flush_put_records_parks_on_raising_call():
 def test_empty_spool_both_paths_return_zero_rows(spark, tmp_path):
     """An EMPTY spool (producer saw zero rows) must read back as an empty
     frame on BOTH consume paths, not error. The round-7 empty-fixture
-    sweep caught both: Spark substitutes [None] for an empty DataSource
-    partitions() list and still calls read(None) (pyspark worker
-    plan_data_source_read), and the JVM scan's *.json glob raises
-    PATH_NOT_FOUND when the directory has no spool files."""
+    sweep caught the JVM scan's *.json glob raising PATH_NOT_FOUND when
+    the directory has no spool files; the stream reader must drain an
+    empty listing without emitting a row."""
+    import os
+    import time
+    import uuid
+
     from streamsurfer_spark.sources.kinesis_source import (
         SCHEMA,
         register,
@@ -268,19 +269,30 @@ def test_empty_spool_both_paths_return_zero_rows(spark, tmp_path):
     )
 
     spool = str(tmp_path / "empty_spool")
-    import os
-
     os.makedirs(spool)
 
-    register(spark)
-    ds = spark.read.format("kinesis_replay").option("spool_dir", spool).load()
     jvm = spool_items(spark, spool)
-
-    assert ds.count() == 0
     assert jvm.count() == 0
     # same shape as the populated path — downstream from_json/aggregate
     # plans bind by name either way
-    assert ds.columns == jvm.columns
-    assert [f.dataType for f in ds.schema.fields] == [
-        f.dataType for f in jvm.schema.fields
-    ]
+    expected = spark.createDataFrame([], SCHEMA).schema
+    assert jvm.schema == expected
+
+    register(spark)
+    stream = spark.readStream.format("kinesis_replay").option("spool_dir", spool).load()
+    assert stream.schema == expected
+    name = f"kempty_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(processingTime="50 milliseconds")
+        .start()
+    )
+    deadline = time.time() + 60
+    while q.lastProgress is None and time.time() < deadline:
+        time.sleep(0.2)
+    q.stop()
+    q.awaitTermination()
+    assert q.exception() is None
+    assert spark.table(name).count() == 0

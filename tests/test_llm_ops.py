@@ -9,6 +9,7 @@ duplicates.
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from streamsurfer_spark.functions.hashing import md5_long64_py
 from streamsurfer_spark.operators import dedup, multimodal, similarity
@@ -826,3 +827,40 @@ def test_multimodal_null_payload_raises_with_doc_id(spark):
     df = spark.createDataFrame([(3, None)], "doc_id long, text string")
     with pytest.raises(PythonException, match="NULL payload for doc_id 3"):
         multimodal.extract_features(multimodal.as_media(df)).collect()
+
+
+@pytest.mark.parametrize("width", [64, 3, 0])
+def test_unroll_false_bitwise_equals_unrolled(spark, width):
+    """dot_sql/norm_sql(unroll=False) must be bit-identical to the
+    unrolled fast path on in-width vectors (both reproduce the same
+    left-associative float64 chain) and on off-width vectors (both take
+    the HOF form)."""
+    import math
+    import random
+
+    from pyspark.sql import functions as F
+
+    from streamsurfer_spark.operators.similarity import dot_sql, norm_sql
+
+    rng = random.Random(1414)
+    rows = []
+    for _ in range(50):
+        a = [rng.randint(-2000, 2000) for _ in range(width)]
+        b = [rng.randint(-2000, 2000) for _ in range(width)]
+        rows.append((a, b))
+    # adversarial floats only reach the cast inside; ints model the
+    # engine's ×1000-quantized embeddings (explicit schema: width 0 rows
+    # are empty arrays, which defeat inference)
+    df = spark.createDataFrame(rows, "a array<bigint>, b array<bigint>")
+    got = df.select(
+        F.expr(dot_sql("a", "b")).alias("d1"),
+        F.expr(dot_sql("a", "b", unroll=False)).alias("d2"),
+        F.expr(norm_sql("a")).alias("n1"),
+        F.expr(norm_sql("a", unroll=False)).alias("n2"),
+    ).collect()
+    for r in got:
+        for x, y in ((r.d1, r.d2), (r.n1, r.n2)):
+            if x is None or (isinstance(x, float) and math.isnan(x)):
+                assert y is None or math.isnan(y)
+            else:
+                assert x == y and math.copysign(1, x) == math.copysign(1, y)

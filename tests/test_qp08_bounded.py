@@ -78,22 +78,20 @@ def test_bounded_derived_default_equals_monolithic(spark, mono_sf0001):
 
 def test_lsh_band_partials_sum_to_monolithic(spark):
     """Operator-level twin for the band slice (r12 verdict item 4): the
-    per-slice shared-band partials, summed over a pass count that does
-    not divide the bucket space evenly, must reproduce
-    lsh_candidate_pairs bit-for-bit — pair set AND counts."""
+    per-slice shared-band partials (lsh_candidate_pairs with slice_of),
+    summed over a pass count that does not divide the bucket space
+    evenly, must reproduce the unsliced lsh_candidate_pairs bit-for-bit
+    — pair set AND counts."""
     import os
     from functools import reduce
 
     import pyspark.sql.functions as F
 
-    from streamsurfer_spark.operators.dedup import (
-        lsh_band_pair_partials,
-        lsh_candidate_pairs,
-    )
+    from streamsurfer_spark.operators.dedup import lsh_candidate_pairs
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     mono = _rows(lsh_candidate_pairs(docs))
-    parts = [lsh_band_pair_partials(docs, part=p, n_parts=5) for p in range(5)]
+    parts = [lsh_candidate_pairs(docs, slice_of=(p, 5)) for p in range(5)]
     summed = (
         reduce(lambda a, b: a.unionByName(b), parts)
         .groupBy("doc_a", "doc_b")

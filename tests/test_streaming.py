@@ -332,44 +332,6 @@ def test_stream_stream_interval_join_parity(spark):
     assert stream_pairs == batch_pairs and len(stream_pairs) > 0
 
 
-def test_transform_with_state_map_counts(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): per-user
-    MapState survives micro-batches; update mode emits only changed
-    (user, type) rows. Skipped where the worker's protobuf runtime
-    dependency is absent (environment policy: no installs)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithState worker needs protobuf; permanently absent in "
-            "this container (no network, no installs) — see FIXTURES.md §4"
-        )
-    from streamsurfer_spark.streaming.stateful import event_type_counter
-
-    d = tmp_path / "twd_events"
-    d.mkdir()
-    _write_events(d / "f1.parquet", [(1, _ts(1), 7, "click", 1.5), (2, _ts(2), 7, "view", 2.0)])
-    time.sleep(1.05)
-    _write_events(d / "f2.parquet", [(3, _ts(3), 7, "click", 3.0), (4, _ts(4), 8, "view", 4.0)])
-
-    stream = read_events_stream(spark, str(d), max_files_per_trigger=1)
-    out = run_to_memory(event_type_counter(stream), "update")
-    rows = out.collect()
-    final = {}
-    for r in rows:
-        k = (r.user_id, r.event_type)
-        final[k] = max(final.get(k, 0), r.n_events)
-    assert final == {(7, "click"): 2, (7, "view"): 1, (8, "view"): 1}
-    # cross-batch accumulation visible: click went 1 → 2 for user 7
-    clicks7 = sorted(r.n_events for r in rows if r.user_id == 7 and r.event_type == "click")
-    assert clicks7 == [1, 2]
-    # update mode emits only changed keys: batch 2 has no new "view" for 7,
-    # so (7, view) appears exactly once
-    assert sum(1 for r in rows if r.user_id == 7 and r.event_type == "view") == 1
-
-
 def test_stream_stream_left_outer_interval_join(spark, tmp_path):
     """leftOuter interval join: the matched purchase pairs normally; the
     unmatched one emits with a NULL right side once the watermark (driven

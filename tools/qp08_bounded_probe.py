@@ -65,10 +65,12 @@ def main() -> None:
     # recipe runs human-free: the default 8g/32-partition session died
     # in the assign/exchange stages at ≥100× — a big probe needs the
     # heap for per-task sort buffers and the partition count to keep
-    # each shuffle partition within them. Env overrides still win.
+    # each shuffle partition within them. A set SPARK_GRAFT_DRIVER_MEM
+    # still wins.
+    shuffle_partitions = None
     if replicas >= 100:
+        shuffle_partitions = 256
         os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
-        os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "256")
         # scratch disk is the probe's binding resource; trade CPU for
         # ~1.5-2× smaller shuffle files (session.py knob)
         os.environ.setdefault("SPARK_GRAFT_IO_CODEC", "zstd")
@@ -141,7 +143,7 @@ def main() -> None:
     from streamsurfer_spark.queries.pipeline_q import qp08_canonical_map_bounded
     from streamsurfer_spark.session import get_spark
 
-    spark = get_spark("qp08-bounded-probe")
+    spark = get_spark("qp08-bounded-probe", shuffle_partitions=shuffle_partitions)
     label = n_passes
     if n_passes is None:
         # resolve the derived count up front so the log line records the
