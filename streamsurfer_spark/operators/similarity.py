@@ -79,7 +79,7 @@ NORM_EXPR = (
 # unreachable. Measured at 2M evals of the sf0.1 embeddings (noop sink,
 # best-of-3): dot 0.741 → 0.445 s (1.67×), norm 0.525 → 0.411 s (1.28×)
 # — probe recorded in OPTIMIZATION_r13.md; pinned bitwise against the
-# HOF forms by tests/test_properties_r13.py (NULL/NaN/-0.0/ragged).
+# HOF forms by tests/test_llm_ops.py (NULL/NaN/-0.0/ragged).
 
 
 def _unrolled_sum_sql(terms: list[str]) -> str:

@@ -1362,7 +1362,7 @@ def qp08_canonical_map_bounded(
         # verdict item 4): "a System.gc() makes ContextCleaner enqueue
         # and delete dead shuffles promptly" is observed behavior, not
         # documented API, and `_jvm` is private — the rule is
-        # version-sentineled in tests/test_properties_r12.py and listed
+        # version-sentineled in tests/test_qp08_bounded.py and listed
         # in the empirical-rule inventory (test_properties_r11).
         del inter_p, sizes_p, lsh_p
         spark.sparkContext._jvm.System.gc()

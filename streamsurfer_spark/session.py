@@ -90,13 +90,18 @@ TABLES = (
 def get_spark(app_name: str = "streamsurfer-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session used by the engine, tests, and bench.
 
-    Local mode uses $SPARK_GRAFT_CPUS threads; on a cluster the same
+    Local mode uses $SPARK_GRAFT_CPUS threads, by default the CPUs this
+    process may run on (what ``nproc`` reports); on a cluster the same
     configuration is valid — nothing here assumes single-node.
     ``shuffle_partitions`` defaults to the thread count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if hasattr(os, "sched_getaffinity"):
+        host_cpus = len(os.sched_getaffinity(0))
+    else:
+        host_cpus = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else host_cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -864,3 +864,195 @@ def test_unroll_false_bitwise_equals_unrolled(spark, width):
                 assert y is None or math.isnan(y)
             else:
                 assert x == y and math.copysign(1, x) == math.copysign(1, y)
+
+
+def _f64_key(v):
+    import math
+    import struct
+
+    if v is None:
+        return None
+    if math.isnan(v):
+        return "NaN"  # any NaN bit pattern counts as the same poison value
+    return struct.pack(">d", v)
+
+
+def test_unrolled_dot_norm_bitwise_equals_hof(spark):
+    """dot_sql/norm_sql's unrolled fast paths must be BITWISE identical to
+    the HOF forms across the adversarial value domain: the CASE-guard width
+    check, NULL arrays, NULL elements (poisoning), -0.0, NaN/Infinity
+    propagation, denormals, and ragged widths that fall back to the HOF
+    branch. Compared on the IEEE bit pattern, so -0.0 vs 0.0 fails."""
+    import random
+
+    import pyspark.sql.functions as F
+
+    from streamsurfer_spark.operators.similarity import (
+        DIM,
+        DOT_EXPR,
+        NORM_EXPR,
+        dot_sql,
+        norm_sql,
+    )
+
+    rng = random.Random(0xC0FFEE13)
+
+    def vec(width, special_rate=0.25):
+        out = []
+        for _ in range(width):
+            r = rng.random()
+            if r < special_rate:
+                out.append(
+                    rng.choice(
+                        [
+                            None,
+                            0.0,
+                            -0.0,
+                            float("nan"),
+                            float("inf"),
+                            float("-inf"),
+                            5e-324,  # denormal
+                            1e308,
+                            -1e308,
+                        ]
+                    )
+                )
+            else:
+                out.append(rng.uniform(-1e6, 1e6))
+        return out
+
+    rows = []
+    # standard width (fast path), clean + special values
+    for _ in range(40):
+        rows.append((vec(DIM, 0.0), vec(DIM, 0.0)))
+    for _ in range(40):
+        rows.append((vec(DIM), vec(DIM)))
+    # ragged / fallback widths, incl. one side at DIM
+    for w in (0, 1, DIM - 1, DIM + 1, 7):
+        rows.append((vec(w), vec(w)))
+        rows.append((vec(DIM), vec(w)))
+        rows.append((vec(w), vec(DIM)))
+    # NULL arrays
+    rows.append((None, vec(DIM)))
+    rows.append((vec(DIM), None))
+    rows.append((None, None))
+
+    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    got = df.select(
+        F.expr(dot_sql("a", "b")).alias("dot_fast"),
+        F.expr(DOT_EXPR.format(a="a", b="b")).alias("dot_hof"),
+        F.expr(norm_sql("a")).alias("nrm_fast"),
+        F.expr(NORM_EXPR.format(a="a")).alias("nrm_hof"),
+    ).collect()
+    assert len(got) == len(rows)
+    for i, r in enumerate(got):
+        assert _f64_key(r.dot_fast) == _f64_key(r.dot_hof), (i, r)
+        assert _f64_key(r.nrm_fast) == _f64_key(r.nrm_hof), (i, r)
+
+
+def test_lsh_bucket_unroll_bitwise_equals_hof(spark):
+    """lsh_buckets' inlined plane dot (literal weights, unrolled) must
+    bucket EVERY vector exactly as the old zip_with/aggregate form did —
+    including NULL-element rows, whose NULL dot must still yield bit 0."""
+    import random
+
+    import pyspark.sql.functions as F
+
+    from streamsurfer_spark.operators.similarity import (
+        DIM,
+        DOT_EXPR,
+        N_PLANES,
+        lsh_buckets,
+        plane_weights,
+    )
+
+    rng = random.Random(0x13B0CCE7)
+    rows = []
+    for i in range(120):
+        v = [float(rng.randint(-1000, 1000)) for _ in range(DIM)]
+        if i % 7 == 0:
+            v[rng.randrange(DIM)] = None  # NULL element → NULL dot → bit 0
+        if i % 11 == 0:
+            v[rng.randrange(DIM)] = 0.0  # boundary: dot can land on 0
+        rows.append((i, v))
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+
+    fast = {
+        r.id: r.bucket
+        for r in lsh_buckets(df, vec_col="embedding", id_col="id").collect()
+    }
+
+    # the pre-r13 HOF form, verbatim: literal weight array zip_with'd in
+    bits = []
+    for p, weights in enumerate(plane_weights(N_PLANES)):
+        arr = f"array({', '.join(str(w) for w in weights)})"
+        dot = DOT_EXPR.format(a=arr, b="embedding")
+        bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
+    old = {
+        r.id: r.bucket
+        for r in df.select(
+            "id", F.expr(" + ".join(bits)).alias("bucket")
+        ).collect()
+    }
+    assert fast == old
+
+
+def test_grouped_pair_expand_matches_self_join(spark):
+    """grouped_pair_expand (the r13 single-evaluation pair stage) must
+    reproduce the capped self-join's output EXACTLY, including the three
+    parity edges the rewrite could silently change: NULL group keys (an
+    equi-join key never matches NULL), duplicate first-member values
+    (the join's strict a.id < b.id drops equal-id pairs), and
+    multi-column keys. Compared as sorted multisets so a duplicated id
+    pairing with a third member still counts once per copy."""
+    import pyspark.sql.functions as F
+
+    from streamsurfer_spark.functions.pairs import grouped_pair_expand
+
+    rows = [
+        # group g1: 3 members -> 3 pairs
+        ("g1", 0, 1, 10),
+        ("g1", 0, 2, 20),
+        ("g1", 0, 3, 30),
+        # group g2: singleton -> no pairs
+        ("g2", 0, 4, 40),
+        # NULL in either key column -> never pairs (even with itself)
+        (None, 0, 5, 50),
+        (None, 0, 6, 60),
+        ("g3", None, 7, 70),
+        # duplicate id within a group: copies never pair with EACH OTHER
+        # (strict <) but each copy pairs with the third member
+        ("g4", 1, 8, 80),
+        ("g4", 1, 8, 81),
+        ("g4", 1, 9, 90),
+    ]
+    df = spark.createDataFrame(rows, "k string, k2 int, id long, payload long")
+
+    for keys in (["k"], ["k", "k2"]):
+        a = df.select(
+            *keys, F.col("id").alias("id_a"), F.col("payload").alias("p_a")
+        ).alias("a")
+        b = df.select(
+            *[F.col(c).alias(f"{c}_b") for c in keys],
+            F.col("id").alias("id_b"),
+            F.col("payload").alias("p_b"),
+        ).alias("b")
+        cond = F.col("id_a") < F.col("id_b")
+        for c in keys:
+            cond = cond & (F.col(c) == F.col(f"{c}_b"))
+        joined = sorted(
+            (r.id_a, r.id_b, r.p_a, r.p_b)
+            for r in a.join(b, cond).select("id_a", "id_b", "p_a", "p_b").collect()
+        )
+        expanded = sorted(
+            (r["_pa"]["id"], r["_pb"]["id"], r["_pa"]["payload"], r["_pb"]["payload"])
+            for r in grouped_pair_expand(df, keys, ["id", "payload"]).collect()
+        )
+        assert expanded == joined, keys
+    # the non-degenerate content sanity: g1's three pairs are present
+    got = {
+        (r["_pa"]["id"], r["_pb"]["id"])
+        for r in grouped_pair_expand(df, ["k"], ["id", "payload"]).collect()
+    }
+    assert {(1, 2), (1, 3), (2, 3)} <= got
+    assert not any(x == y for x, y in got)

@@ -69,7 +69,7 @@ def test_empirical_rule_inventory_complete_and_pinned():
     | stream-stream outer-join emission timing | r9 | qs16 | test_properties_r9 |
     | session-window exactly-at-gap MERGE (`>` splits, `=` joins) | r10 | qs03, qs08, qt19 | test_properties_r10 |
     | file-source mtime order + one-file-per-trigger | r11 | qs07, qs15 | this file |
-    | ContextCleaner shuffle release after System.gc() (+ private `_jvm`) | r11, pinned r12 | qp08_canonical_map_bounded | test_properties_r12 |
+    | ContextCleaner shuffle release after System.gc() (+ private `_jvm`) | r11, pinned r12 | qp08_canonical_map_bounded | test_qp08_bounded |
 
     Deliberately ABSENT (order-invariant by construction, not by
     observation): qs13/qs14's latest-wins merge, qs15's replay
@@ -77,7 +77,7 @@ def test_empirical_rule_inventory_complete_and_pinned():
     """
     from tests.test_properties_r9 import _QS16_RULE_DERIVED_ON
     from tests.test_properties_r10 import _SESSION_MERGE_RULE_DERIVED_ON
-    from tests.test_properties_r12 import _CONTEXTCLEANER_GC_RULE_DERIVED_ON
+    from tests.test_qp08_bounded import _CONTEXTCLEANER_GC_RULE_DERIVED_ON
 
     pins = {
         "qs16 outer-join emission rule": _QS16_RULE_DERIVED_ON,

@@ -14,11 +14,14 @@ key) and partial-sum exactness (integer counts); these tests pin the
 equality at two SFs and at two pass counts, including n_passes=1 (the
 degenerate case that must equal the monolithic plan trivially) and
 pass counts that do NOT divide either key space evenly, plus a direct
-operator-level partial-sum twin for the band path.
+operator-level partial-sum twin for the band path. The empirical
+ContextCleaner rule the bounded scratch rests on carries a Spark-version
+sentinel at the end of this file.
 """
 
 from __future__ import annotations
 
+import pyspark
 import pytest
 
 from tests.conftest import SF_DIR
@@ -117,3 +120,35 @@ def test_derived_pass_count_rule():
     assert derived_qp08_passes(0, 48.0) == 1
     # half the scratch → twice the passes (same estimated exchange)
     assert derived_qp08_passes(2_300_000_000, 24.0) == 16
+
+
+# EMPIRICAL RULE (pipeline_q.qp08_canonical_map_bounded): after the
+# last Python references to a pass's DataFrames are dropped, a
+# `spark.sparkContext._jvm.System.gc()` call makes ContextCleaner
+# enqueue the dead ShuffleDependency cleanups promptly enough that the
+# pass's shuffle files are deleted BEFORE the next pass writes its own
+# — the property the bounded-scratch claim rests on (r11 1000× probe:
+# 54.8 GB peak vs two monolithic DNFs; without the GC the passes'
+# scratch ADDS). Observed behavior, not documented API — ContextCleaner
+# is driven by JVM weak-reference processing, and `_jvm` itself is a
+# private py4j surface that a Spark release may rename or gate.
+#
+# On upgrade: re-run tools/qp08_bounded_probe.py at a replica count
+# big enough that per-pass scratch is visible (≥100×) and confirm
+# scratch plateaus per-pass instead of climbing monotonically; then
+# bump the pin.
+_CONTEXTCLEANER_GC_RULE_DERIVED_ON = "4.1.2"
+
+
+def test_contextcleaner_gc_rule_spark_version_sentinel():
+    """Fail LOUDLY on a Spark version change instead of letting the
+    bounded-pass scratch bound silently stop holding (or the private
+    `_jvm` access start raising) — see the rule note above."""
+    assert pyspark.__version__ == _CONTEXTCLEANER_GC_RULE_DERIVED_ON, (
+        f"Spark version changed ({pyspark.__version__} != "
+        f"{_CONTEXTCLEANER_GC_RULE_DERIVED_ON}): the ContextCleaner-"
+        "promptness-after-System.gc() rule and the private _jvm access "
+        "in qp08_canonical_map_bounded were derived empirically on "
+        f"{_CONTEXTCLEANER_GC_RULE_DERIVED_ON} — re-verify per the rule "
+        "note, then bump the pin."
+    )

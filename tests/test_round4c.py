@@ -30,22 +30,6 @@ def _pagerank_py(edges: list[tuple[int, int]], iters: int, damp: int) -> dict:
     return {v: (deg[v], rank[v]) for v in deg}
 
 
-def test_bench_and_probe_names_resolve():
-    """Every name in bench.py's BENCH_QUERIES and scale_probe's PROBES
-    must exist in the registry — a typo voids the driver's whole bench
-    record (BENCH_r02 died to a single broken query)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from bench import BENCH_QUERIES
-    from tools.scale_probe import PROBES
-    from streamsurfer_spark.queries import registry
-
-    reg = registry()
-    missing = [n for n in (*BENCH_QUERIES, *PROBES) if n not in reg]
-    assert not missing, f"unknown query names: {missing}"
-
-
 def test_training_mix_stage_populations_nest(spark):
     """qp07's defining property: every stage's survivors are a subset of
     the previous stage's (checked on the fixture at test SF)."""

@@ -79,9 +79,8 @@ def main() -> None:
             "vec_id", "vec_id"
         )
         bcast_bytes = k * (8 + DIM * 8)
-        # best-of-2: sheds the minutes-long degraded-host bursts this
-        # box's co-tenant class produces (CANARY_BANDS.json) without
-        # hiding a real cost — a plan can't run FASTER than it is
+        # best-of-2: sheds a transient slow host window without hiding
+        # a real cost — a plan can't run FASTER than it is
         runs = []
         for _ in range(2):
             t0 = time.perf_counter()
